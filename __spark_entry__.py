@@ -2108,9 +2108,10 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-dim embeddings -> 8 subspace codes of 3 bits each (m=8, K=8) — the
     compression half of the canonical trillion-scale IVF-PQ ANN layout
     (m bytes/vector instead of 4*dim; scored without decompression by
-    q_pq_adc_topk). MAP-ONLY plan: subcentroids are inlined literals,
-    per-subspace argmin is a sort_array over a transform. Gated in melted
-    (vec_id, subspace, code, dist2) form; dist2 = ROUND(xx - 2*xc + cc, 8)
+    q_pq_adc_topk). MAP-ONLY plan: one Arrow kernel carries the
+    subcentroids in its closure and takes the per-subspace argmin with
+    code-ascending ties. Gated in melted (vec_id, subspace, code,
+    dist2) form; dist2 = ROUND(xx - 2*xc + cc, 8)
     where every term is a sequential float fold, so DuckDB reproduces the
     codes AND distances bit-for-bit."""
     from anomalydetection_spark.functions.similarity import pq_encode
@@ -3444,8 +3445,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skew_salted_counts": q_skew_salted_counts,
         "dedup_exact": q_dedup_exact,
         "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
         # ---- positions 51+ (outside the driver's 50-entry window) ----
+        "dedup_simhash": q_dedup_simhash,
         # Rotated out in round 5 (driver-green r01-r04):
         "text_quality_buckets": q_text_quality_buckets,
         "column_stats_by_group": q_column_stats_by_group,

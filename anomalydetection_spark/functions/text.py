@@ -709,7 +709,8 @@ def bpe_tokens(docs: DataFrame, merges: list[tuple[str, str]],
     result of an earlier merge — what BPE training always produces)
     this is equivalent to applying the merges once each in rank order,
     which is what makes the DuckDB oracle expressible as a chain of
-    boundary-anchored ``replace`` calls.
+    boundary-anchored ``replace`` calls. A table that is not well formed
+    raises ``ValueError`` naming the first bad rank, before any job runs.
 
     Returns ``docs``'s columns plus ``bpe_tokens array<string>`` and
     ``n_bpe_tokens long`` (plus ``bpe_ids array<int>`` / ``n_unk
@@ -734,7 +735,17 @@ def bpe_tokens(docs: DataFrame, merges: list[tuple[str, str]],
         StructType,
     )
 
-    ranks = {(a, b): i for i, (a, b) in enumerate(merges)}
+    ranks: dict[tuple[str, str], int] = {}
+    made: set[str] = set()
+    for rank, (a, b) in enumerate(merges):
+        for side in (a, b):
+            if len(side) != 1 and side not in made:
+                raise ValueError(
+                    f"merges rank {rank} {(a, b)!r}: side {side!r} is "
+                    "neither a single character nor the result of an "
+                    "earlier merge")
+        ranks[(a, b)] = rank
+        made.add(a + b)
     if pre_split == "whitespace":
         rx = None
     else:
@@ -912,7 +923,9 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
     * ``rep_pass`` — Gopher-shaped bounds evaluated in INTEGER
       cross-multiplied form (``dup_lines·100 ≤ 30·n_lines``,
       ``dup_line_chars·100 ≤ 20·line_chars``,
-      ``top2·100 ≤ 20·text_chars``, ``top3·100 ≤ 18·text_chars``)
+      ``top2·100 ≤ 20·text_chars``, ``top3·100 ≤ 18·text_chars``,
+      ``top4·100 ≤ 16·text_chars`` — each bound keyed by its n, so
+      ``ngram_ns`` must be drawn from {2, 3, 4})
       so boundary docs can never flip on float rounding.
 
     Scale shape: line metrics are one (id, line)-keyed aggregation with
@@ -923,9 +936,13 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
     structural separators and excluded (mirrors ``line_dedup``). NULL
     ids/texts are dropped (keyed per-document metrics are undefined for
     them; NotNullCheck owns flagging)."""
+    # Gopher's top-n-gram character-fraction bounds, percent, keyed by n
+    top_pct = {2: 20, 3: 18, 4: 16}
     for n in ngram_ns:
-        if n < 1:
-            raise ValueError(f"ngram sizes must be >= 1: {ngram_ns}")
+        if n not in top_pct:
+            raise ValueError(
+                f"no Gopher top-n-gram bound for n={n}; ngram_ns must be "
+                f"drawn from {sorted(top_pct)}")
     base = docs.filter(
         F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
     ).select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
@@ -987,8 +1004,9 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
         den > 0, F.round(num.cast("double") / den, 8)
     ).otherwise(F.lit(0.0))
     gram_pass = [
-        ints[f"top{n}gram_chars"] * 100 <= lim * F.col("text_chars")
-        for n, lim in zip(ngram_ns, (20, 18, 16, 15))
+        ints[f"top{n}gram_chars"] * 100
+        <= top_pct[n] * F.col("text_chars")
+        for n in ngram_ns
     ]
     passed = (
         (ints["dup_lines"] * 100 <= 30 * ints["n_lines"])

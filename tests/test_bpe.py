@@ -77,6 +77,25 @@ def test_bpe_greedy_order_is_rank_not_position(spark):
     assert list(out["bpe_tokens"]) == ["w", "n", "es"]
 
 
+def test_bpe_rejects_malformed_merges_table(spark):
+    """A merge side that is neither a single character nor an EARLIER
+    merge's result breaks the greedy == apply-in-order equivalence the
+    oracle relies on, so it is refused up front, naming the rank."""
+    docs = spark.createDataFrame([("d0", "lowest")], "doc_id string, text string")
+    bad = [
+        [("e", "s"), ("lo", "w")],             # 'lo' never merged
+        [("es", "t"), ("e", "s")],             # 'es' merged only LATER
+        [("e", "s"), ("", "t")],               # empty side
+    ]
+    for merges in bad:
+        rank = 0 if merges[0][0] == "es" else 1
+        with pytest.raises(ValueError, match=f"rank {rank} "):
+            bpe_tokens(docs, merges, pre_split="whitespace")
+    # multi-character sides built by earlier merges stay accepted
+    out = bpe_tokens(docs, MERGES, pre_split="whitespace").first()
+    assert list(out["bpe_tokens"]) == ["low", "est"]
+
+
 def test_bpe_vocab_ids_and_unk(spark):
     vocab = {"low": 0, "newest": 2, "e": 3}
     docs = spark.createDataFrame(

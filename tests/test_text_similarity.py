@@ -723,13 +723,105 @@ def test_vocabulary_matches_python_and_uses_topk_plan(spark):
     assert got == [("c", 4, 2, 1), ("b", 3, 2, 2)]
 
 
-def test_arrow_centroid_scorer_bit_parity_with_literal_path(spark):
-    """VERDICT r04 #1: above INLINE_LITERAL_BUDGET (C·dim literals) the
-    centroid scorer must route through the Arrow broadcast-numpy kernel
-    and produce BIT-EQUAL output to the inlined-literal plan — same
-    index-order dots, same ROUND-8 cosine, same (cos DESC, cid ASC)
-    tie-breaks. Forced here with literal_budget=0 on identical inputs
-    (mirrors kernels/recommender.py's k>64 codegen fallback pattern)."""
+def _duck(sql: str, corpus, name: str = "corpus") -> list:
+    """Run ``sql`` on DuckDB with ``corpus`` bound as table ``name``:
+    (vec_id, embedding) rows or a Spark frame of them, as an Arrow
+    list<double> so NaN elements stay NaN (python parameters would turn
+    NaN into NULL)."""
+    import duckdb
+    import pyarrow as pa
+
+    if not isinstance(corpus, list):
+        corpus = [(r["vec_id"], r["embedding"]) for r in corpus.collect()]
+    con = duckdb.connect()
+    con.register(name, pa.table({
+        "vec_id": pa.array([r[0] for r in corpus], pa.int64()),
+        "embedding": pa.array([r[1] for r in corpus], pa.list_(pa.float64())),
+    }))
+    return con.sql(sql).fetchall()
+
+
+def _ref_nearest(corpus, n_cent: int, nprobe: int) -> dict:
+    """Independent reference for the centroid scorer, in the
+    ``o_ivf_centroid_update`` formulation (DuckDB ``list_dot_product``,
+    ROUND 8, ORDER BY cos DESC, cid ASC) with the centroids being the
+    corpus rows ``vec_id < n_cent``. The degenerate-input contract is
+    spelled out: NULL / zero-norm rows are filtered, a NaN cosine ranks
+    last (cid ASC) and is emitted as NULL. Returns {(vec_id, rank):
+    (cid, cos)} for ranks 1..nprobe."""
+    rows = _duck(f"""
+    WITH v AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
+             list_dot_product(CAST(embedding AS DOUBLE[]),
+                              CAST(embedding AS DOUBLE[])) AS na2
+      FROM corpus WHERE embedding IS NOT NULL
+    ), c AS (
+      SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS e
+      FROM corpus WHERE vec_id < {n_cent}
+    ), s AS (
+      SELECT v.vec_id, c.cid,
+             ROUND(list_dot_product(v.e, c.e)
+                   / SQRT(v.na2 * list_dot_product(c.e, c.e)), 8) AS cos
+      FROM v, c WHERE v.na2 > 0
+    ), r AS (
+      SELECT vec_id, cid, cos,
+             ROW_NUMBER() OVER (PARTITION BY vec_id
+                                ORDER BY isnan(cos), cos DESC, cid ASC) AS rk
+      FROM s
+    )
+    SELECT vec_id, rk, cid, CASE WHEN isnan(cos) THEN NULL ELSE cos END
+    FROM r WHERE rk <= {nprobe}
+    """, corpus)
+    return {(v, rk): (cid, cos) for v, rk, cid, cos in rows}
+
+
+def _ref_pq_encode(corpus, m: int, n_codes: int, d: int) -> dict:
+    """Independent reference for ``pq_encode``, in the ``o_pq_encode``
+    formulation generalized to (m, K, d): codebook entries are the rows
+    ``vec_id < n_codes`` sliced per subspace, dist² = ROUND(xx − 2·xc +
+    cc, 8) over DuckDB ``list_dot_product`` folds, argmin by (d2 ASC,
+    code ASC) with NaN last and emitted as NULL. Returns {vec_id:
+    (codes, dist2s)}."""
+    xs = f"x.e[cb.s * {d} + 1 : cb.s * {d} + {d}]"
+    rows = _duck(f"""
+    WITH vs AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
+      FROM corpus WHERE embedding IS NOT NULL
+    ), subs AS (SELECT UNNEST(range({m})) AS s),
+    cb AS (
+      SELECT subs.s AS s, c.vec_id AS code,
+             c.e[subs.s * {d} + 1 : subs.s * {d} + {d}] AS v
+      FROM (SELECT * FROM vs WHERE vec_id < {n_codes}) c, subs
+    ), dists AS (
+      SELECT x.vec_id, cb.s, cb.code,
+             ROUND(list_dot_product({xs}, {xs})
+                   - 2 * list_dot_product({xs}, cb.v)
+                   + list_dot_product(cb.v, cb.v), 8) AS d2
+      FROM vs x, cb
+    ), best AS (
+      SELECT vec_id, s, code, d2,
+             ROW_NUMBER() OVER (PARTITION BY vec_id, s
+                                ORDER BY isnan(d2), d2 ASC, code ASC) AS rn
+      FROM dists
+    )
+    SELECT vec_id, s, code, CASE WHEN isnan(d2) THEN NULL ELSE d2 END
+    FROM best WHERE rn = 1 ORDER BY vec_id, s
+    """, corpus)
+    out: dict = {}
+    for vid, _s, code, d2 in rows:
+        codes, d2s = out.setdefault(vid, ([], []))
+        codes.append(code)
+        d2s.append(d2)
+    return out
+
+
+def test_arrow_centroid_scorer_matches_duckdb(spark):
+    """The Arrow centroid scorer is BIT-EQUAL to DuckDB list_dot_product
+    SQL over the same rows — same index-order dots, same ROUND-8 cosine,
+    same (cos DESC, cid ASC) tie-breaks — for top-1 assignment, nprobe
+    probe lists, and one Lloyd step checked against the
+    ``ivf_centroid_update`` oracle itself."""
+    import __spark_entry__ as E
     from anomalydetection_spark.functions.similarity import (
         ivf_assign,
         ivf_centroid_update,
@@ -739,44 +831,32 @@ def test_arrow_centroid_scorer_bit_parity_with_literal_path(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     centroids = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding")
 
-    lit = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
+    got = {(r["vec_id"], 1): (r["bucket"], r["cos_to_centroid"])
            for r in ivf_assign(emb, centroids).collect()}
-    arr = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
-           for r in ivf_assign(emb, centroids, literal_budget=0).collect()}
-    assert arr == lit and len(lit) > 0
+    assert got == _ref_nearest(emb, 8, 1) and len(got) > 0
 
     for nprobe in (2, 3):
-        plit = {(r["vec_id"], r["bucket"])
-                for r in ivf_probe_buckets(emb, centroids, nprobe).collect()}
-        parr = {(r["vec_id"], r["bucket"])
-                for r in ivf_probe_buckets(emb, centroids, nprobe,
-                                           literal_budget=0).collect()}
-        assert parr == plit and len(plit) > 0
+        probes = {(r["vec_id"], r["bucket"])
+                  for r in ivf_probe_buckets(emb, centroids, nprobe).collect()}
+        ref = {(v, cid) for (v, _rk), (cid, _cos)
+               in _ref_nearest(emb, 8, nprobe).items()}
+        assert probes == ref and len(ref) > 0
 
-    # one Lloyd step composes the scorer: means must match bit-for-bit
-    import anomalydetection_spark.functions.similarity as sim
-    upd_lit = {(r["bucket"], r["pos"]): (r["mean"], r["n"])
-               for r in ivf_centroid_update(emb, centroids,
-                                            melted=True).collect()}
-    orig = sim.INLINE_LITERAL_BUDGET
-    sim.INLINE_LITERAL_BUDGET = 0
-    try:
-        upd_arr = {(r["bucket"], r["pos"]): (r["mean"], r["n"])
-                   for r in ivf_centroid_update(emb, centroids,
-                                                melted=True).collect()}
-    finally:
-        sim.INLINE_LITERAL_BUDGET = orig
-    assert upd_arr == upd_lit
+    # one Lloyd step composes the scorer: means match the gate's oracle
+    upd = {(r["bucket"], r["pos"]): (r["mean"], r["n"])
+           for r in ivf_centroid_update(emb, centroids, melted=True).collect()}
+    ref_upd = {(b, p): (mean, n) for b, p, mean, n in
+               _duck(E.o_ivf_centroid_update(), emb, "embeddings")}
+    assert upd == ref_upd and len(upd) > 0
 
 
 def test_gemm_dot_mode_matches_exact_arm(spark):
     """dot_mode="gemm" (the BLAS-matmul throughput variant of the Arrow
     scorer) must produce the SAME assignments and probe lists as the
     exact element-order arm, and cosines within the ~1 ulp·dim BLAS
-    reordering bound; an explicit gemm request routes through the Arrow
-    kernel even below the literal budget. Assignments only diverge when
-    two true cosines sit within ~1e-15 AND straddle a repr-tie — never
-    on real data; this fixture asserts exact equality."""
+    reordering bound. Assignments only diverge when two true cosines sit
+    within ~1e-15 AND straddle a repr-tie — never on real data; this
+    fixture asserts exact equality."""
     from anomalydetection_spark.functions.similarity import (
         ivf_assign,
         ivf_probe_buckets,
@@ -786,7 +866,7 @@ def test_gemm_dot_mode_matches_exact_arm(spark):
     centroids = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding")
 
     exact = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
-             for r in ivf_assign(emb, centroids, literal_budget=0).collect()}
+             for r in ivf_assign(emb, centroids).collect()}
     gemm = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
             for r in ivf_assign(emb, centroids, dot_mode="gemm").collect()}
     assert len(gemm) == len(exact) > 0
@@ -798,8 +878,7 @@ def test_gemm_dot_mode_matches_exact_arm(spark):
         assert gcos == pytest.approx(cos, abs=2e-8)
 
     pexact = {(r["vec_id"], r["bucket"])
-              for r in ivf_probe_buckets(emb, centroids, 2,
-                                         literal_budget=0).collect()}
+              for r in ivf_probe_buckets(emb, centroids, 2).collect()}
     pgemm = {(r["vec_id"], r["bucket"])
              for r in ivf_probe_buckets(emb, centroids, 2,
                                         dot_mode="gemm").collect()}
@@ -808,36 +887,36 @@ def test_gemm_dot_mode_matches_exact_arm(spark):
     with pytest.raises(ValueError, match="dot_mode"):
         ivf_assign(emb, centroids, dot_mode="fast").collect()
 
-    # empty centroids must fail loudly in EVERY arm (the literal plan
-    # would emit NULL assignments, the Arrow matrix would be 1-D empty)
+    # empty centroids must fail loudly in both modes, before scoring
     none = centroids.filter(F.col("vec_id") < 0)
-    for kw in ({}, {"dot_mode": "gemm"}, {"literal_budget": 0}):
+    for kw in ({}, {"dot_mode": "gemm"}):
         with pytest.raises(ValueError, match="empty"):
             ivf_assign(emb, none, **kw)
 
 
-def test_arrow_pq_encoder_bit_parity_with_literal_path(spark):
-    """pq_encode above the m·K·d literal budget routes through
-    _pq_encode_arrow; forced via literal_budget=0 — codes AND rounded
-    dist² bit-equal to the literal plan, including code-ascending
+def test_arrow_pq_encoder_matches_duckdb(spark):
+    """pq_encode's codes AND rounded dist² are bit-equal to DuckDB
+    list_dot_product SQL over the same rows, including code-ascending
     tie-breaks on raw-equal distances."""
     from anomalydetection_spark.functions.similarity import pq_encode
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    lit = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
+    got = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
            for r in pq_encode(emb, m=8, n_codes=8).collect()}
-    arr = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
-           for r in pq_encode(emb, m=8, n_codes=8,
-                              literal_budget=0).collect()}
-    assert arr == lit and len(lit) > 0
+    assert got == _ref_pq_encode(emb, 8, 8, 8) and len(got) > 0
 
 
 def test_arrow_scorer_handles_exact_ties_and_round_boundary(spark):
-    """Tie semantics parity on ADVERSARIAL inputs: duplicate centroids
-    (raw-equal cosines → cid ASC must win) and centroids whose cosines
-    differ by <1e-8 (ROUND-8 collapses them — the literal path then
-    tie-breaks on cid, and the kernel's boundary refinement must too)."""
-    from anomalydetection_spark.functions.similarity import ivf_assign
+    """Tie semantics on ADVERSARIAL inputs, against DuckDB: duplicate
+    centroids (raw-equal cosines → cid ASC must win), centroids whose
+    cosines differ by <1e-8 (ROUND-8 collapses them — SQL then
+    tie-breaks on cid, and the kernel's boundary refinement must too),
+    and equidistant PQ codes (code ASC must win)."""
+    from anomalydetection_spark.functions.similarity import (
+        ivf_assign,
+        ivf_probe_buckets,
+        pq_encode,
+    )
 
     base = [1.0, 2.0, 3.0, 4.0]
     rows = [
@@ -851,36 +930,40 @@ def test_arrow_scorer_handles_exact_ties_and_round_boundary(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     centroids = emb.filter(F.col("vec_id") < 4).select("vec_id", "embedding")
-    lit = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
+    got = {(r["vec_id"], 1): (r["bucket"], r["cos_to_centroid"])
            for r in ivf_assign(emb, centroids).collect()}
-    arr = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
-           for r in ivf_assign(emb, centroids, literal_budget=0).collect()}
-    assert arr == lit
-    assert lit[10][0] == 0      # cid ASC among raw-equal 0/1/2
+    assert got == _ref_nearest(rows, 4, 1)
+    assert got[(10, 1)][0] == 0      # cid ASC among raw-equal 0/1/2
+
+    probes = {(r["vec_id"], r["bucket"])
+              for r in ivf_probe_buckets(emb, centroids, 3).collect()}
+    assert probes == {(v, cid) for (v, _rk), (cid, _cos)
+                      in _ref_nearest(rows, 4, 3).items()}
+    assert {cid for v, cid in probes if v == 11} == {0, 1, 2}
+
+    # PQ: a subvector equidistant from both codes takes the lower code
+    pq_rows = [(0, [1.0, 2.0, 3.0, 4.0]), (1, [4.0, 3.0, 2.0, 1.0]),
+               (4, [2.5, 2.5, 2.5, 2.5])]
+    pemb = spark.createDataFrame(
+        pq_rows, "vec_id long, embedding array<double>")
+    enc = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
+           for r in pq_encode(pemb, m=2, n_codes=2).collect()}
+    assert enc == _ref_pq_encode(pq_rows, 2, 2, 2)
+    assert enc[4] == ([0, 0], [2.5, 2.5])
 
 
-def test_arrow_scorer_degenerate_inputs_match_literal_path(spark):
-    """Degenerate-input parity (review r05). Under ANSI SQL the literal
-    plan's division ABORTS the job on a zero divisor, so the defined
-    contract is: NULL / zero-norm corpus rows are filtered in both arms,
-    a zero-norm centroid raises loudly at collect time, and NaN-element
-    vectors (which pass the na2>0 filter — NaN > 0 in Spark's ordering)
-    score NaN ranked LAST with cid-ASC ties — where the Arrow kernel
-    previously died on an empty candidate set."""
-    import math
-
-    import pytest as _pytest
-
+def test_arrow_scorer_degenerate_inputs_match_duckdb(spark):
+    """Degenerate-input contract, against DuckDB: NULL / zero-norm
+    corpus rows are filtered, a zero-norm centroid raises loudly at
+    collect time, and NaN-element vectors (which pass the na2>0 filter —
+    NaN > 0 in Spark's ordering) score NaN, ranked LAST with cid-ASC
+    ties and emitted as NULL. A NaN PQ subspace encodes as code 0 with
+    a NULL dist²."""
     from anomalydetection_spark.functions.similarity import (
         ivf_assign,
         ivf_probe_buckets,
         pq_encode,
     )
-
-    def eq(a, b):
-        if isinstance(a, float) and isinstance(b, float):
-            return (math.isnan(a) and math.isnan(b)) or a == b
-        return a == b
 
     rows = [
         (0, [1.0, 2.0, 3.0, 4.0]),
@@ -893,31 +976,26 @@ def test_arrow_scorer_degenerate_inputs_match_literal_path(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     centroids = emb.filter(F.col("vec_id") < 2).select("vec_id", "embedding")
 
-    lit = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
+    got = {(r["vec_id"], 1): (r["bucket"], r["cos_to_centroid"])
            for r in ivf_assign(emb, centroids).collect()}
-    arr = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
-           for r in ivf_assign(emb, centroids, literal_budget=0).collect()}
-    assert set(arr) == set(lit) == {0, 1, 2, 10}   # NULL + zero-norm dropped
-    for k in lit:
-        assert eq(arr[k][0], lit[k][0]) and eq(arr[k][1], lit[k][1]), k
-    # the NaN-element row survives; its undefined cosine is NULL in both
-    # arms (ranked last, cid-ASC tie pick)
-    assert lit[2][1] is None and lit[2][0] == 0
+    assert got == _ref_nearest(rows, 2, 1)
+    assert {v for v, _ in got} == {0, 1, 2, 10}   # NULL + zero-norm dropped
+    # the NaN-element row survives; its undefined cosine is NULL
+    # (ranked last, cid-ASC tie pick)
+    assert got[(2, 1)] == (0, None)
 
-    # nprobe=2 probe lists agree, NaN row's probes padded cid ASC
-    plit = sorted(
-        ((r["vec_id"], r["bucket"]) for r in
-         ivf_probe_buckets(emb, centroids, 2).collect()))
-    parr = sorted(
-        ((r["vec_id"], r["bucket"]) for r in
-         ivf_probe_buckets(emb, centroids, 2, literal_budget=0).collect()))
-    assert parr == plit and len(plit) == 4 * 2
+    # nprobe=2 probe lists, NaN row's probes padded cid ASC
+    probes = sorted((r["vec_id"], r["bucket"]) for r in
+                    ivf_probe_buckets(emb, centroids, 2).collect())
+    assert probes == sorted((v, cid) for (v, _rk), (cid, _cos)
+                            in _ref_nearest(rows, 2, 2).items())
+    assert len(probes) == 4 * 2
 
-    # zero-norm CENTROID: loud ValueError, not an ANSI abort mid-job
+    # zero-norm CENTROID: loud ValueError, not a NaN column
     zc = spark.createDataFrame(
         [(0, [1.0, 2.0, 3.0, 4.0]), (1, [0.0, 0.0, 0.0, 0.0])],
         "vec_id long, embedding array<double>")
-    with _pytest.raises(ValueError, match="zero norm"):
+    with pytest.raises(ValueError, match="zero norm"):
         ivf_assign(emb, zc)
 
     pq_rows = [
@@ -928,18 +1006,12 @@ def test_arrow_scorer_degenerate_inputs_match_literal_path(spark):
     ]
     pemb = spark.createDataFrame(
         pq_rows, "vec_id long, embedding array<double>")
-    plit2 = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
-             for r in pq_encode(pemb, m=2, n_codes=2).collect()}
-    parr2 = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
-             for r in pq_encode(pemb, m=2, n_codes=2,
-                                literal_budget=0).collect()}
-    assert set(parr2) == set(plit2) and 3 not in plit2  # NULL filtered
-    for k in plit2:
-        assert plit2[k][0] == parr2[k][0], k
-        assert all(eq(x, y)
-                   for x, y in zip(plit2[k][1], parr2[k][1])), k
-    # NaN subspace: code 0 (all-ties code-ASC), dist² NULL in both arms
-    assert plit2[2][0][1] == 0 and plit2[2][1][1] is None
+    enc = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
+           for r in pq_encode(pemb, m=2, n_codes=2).collect()}
+    assert enc == _ref_pq_encode(pq_rows, 2, 2, 2)
+    assert 3 not in enc                                # NULL filtered
+    # NaN subspace: code 0 (all-ties code-ASC), dist² NULL
+    assert enc[2][0][1] == 0 and enc[2][1][1] is None
 
 
 def test_lang_id_accepts_externally_trained_profiles(spark):
@@ -969,7 +1041,8 @@ def test_repetition_signals_hand_computed(spark):
     """Gopher within-doc repetition family (repetition_signals): every
     count verified against hand-computed values on a fixture with a
     known duplicate line, a one-token doc (no 2-grams), a NULL text
-    (dropped) and a blank-only doc (all-zero row, passes)."""
+    (dropped) and a blank-only doc (all-zero row, passes); each
+    top-n-gram bound is keyed by its n."""
     from anomalydetection_spark.functions.text import repetition_signals
 
     df = spark.createDataFrame(
@@ -993,5 +1066,19 @@ def test_repetition_signals_hand_computed(spark):
     assert c["rep_pass"] is True
     assert 3 not in r and len(r) == 3
 
+    # an n without a Gopher bound raises instead of being dropped
     with pytest.raises(ValueError, match="ngram"):
         repetition_signals(df, ngram_ns=(2, 0))
+    with pytest.raises(ValueError, match="n=5"):
+        repetition_signals(df, ngram_ns=(2, 3, 4, 5))
+
+    # each top-n-gram bound belongs to its n (2: 20%, 3: 18%, 4: 16%),
+    # not to its position in ngram_ns: 'a b c' twice plus 20 one-char
+    # tokens is a top 3-gram of 10/51 chars (19.6%), over the 3-gram
+    # bound even when 3 comes first
+    text = "a b c a b c " + " ".join("defghijklmnopqrstuvw")
+    one = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    r = repetition_signals(one, ngram_ns=(3, 4)).first()
+    assert (r["text_chars"], r["top3gram_chars"], r["top4gram_chars"]) \
+        == (51, 10, 7)
+    assert r["rep_pass"] is False
