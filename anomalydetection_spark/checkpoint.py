@@ -17,7 +17,10 @@ filter over the same files, chosen when no physical partitioning exists).
 Each unit runs the full ValidationSuite on its slice; its verdicts,
 violations and a lineage/metrics row land under ``out_dir`` partitioned by
 ``unit=...``; then a tiny JSON manifest ``_ledger/<unit>.json`` is
-committed via atomic rename. A crash between sink write and manifest
+committed via atomic rename. The lineage row is filled without reading
+any sink back: verdict counts come from the suite's driver-held verdict
+rows and ``violation_rows`` from a ``DataFrame.observe`` count taken
+during the violations sink write. A crash between sink write and manifest
 commit re-runs that one unit — every sink write is an idempotent
 overwrite of the unit's own partition directory, so replays converge.
 
@@ -26,7 +29,8 @@ snapshot id when the table provides one; else sorted (path, size,
 mtime) digest of the parquet files). A resume against a *different*
 snapshot refuses to mix results unless ``allow_snapshot_change=True``.
 
-At cluster scale each unit is one Spark job over ~1/n of the data; units
+At cluster scale each unit is a fixed set of Spark jobs over ~1/n of the
+data (about 19 for the image suite, both sink writes included); units
 are sized so a unit's shuffle state fits comfortably in the cluster
 (n_buckets scales with table size, not executor count — the same ledger
 works at N and 4N executors, which is what makes the scaling-efficiency
@@ -43,12 +47,15 @@ from dataclasses import dataclass, field
 from typing import Any, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
-from anomalydetection_spark.suite import ValidationSuite
+from anomalydetection_spark.suite import ValidationSuite, local_frame
 
 LEDGER_DIR = "_ledger"
 
+# One row per completed unit, appended once per run() from driver-held
+# payloads (the same dicts the ledger commits). ``violation_rows`` is the
+# observed row count of the unit's violations sink write.
 LINEAGE_SCHEMA = (
     "unit string, snapshot string, rows long, checks int, verdicts int, "
     "failed int, violation_rows long, elapsed_sec double, committed_at string"
@@ -426,9 +433,12 @@ class CheckpointedRunner:
             viol_rows = 0
             if res.violations is not None:
                 vdir = os.path.join(self.out_dir, "violations", f"unit={unit}")
-                res.violations.write.mode("overwrite").parquet(vdir)
-                viol_rows = spark.read.parquet(vdir).count()
-            vlocal = res.verdicts.collect()
+                # the sink write counts its own rows: no re-read of vdir
+                seen = Observation()
+                (res.violations.observe(seen, F.count(F.lit(1)).alias("rows"))
+                 .write.mode("overwrite").parquet(vdir))
+                viol_rows = seen.get["rows"]
+            vlocal = res.verdict_rows
             res.release()  # unit's sinks are written — free decode caches
             for v in vlocal:
                 scorecard_rows.append({
@@ -478,14 +488,8 @@ class CheckpointedRunner:
             except Exception:
                 pass  # scorecard is best-effort for resumed units
         if lineage_rows:
-            spark.createDataFrame(
-                [
-                    (p["unit"], p["snapshot"], p["rows"], p["checks"], p["verdicts"],
-                     p["failed"], p["violation_rows"], p["elapsed_sec"], p["committed_at"])
-                    for p in lineage_rows
-                ],
-                schema=LINEAGE_SCHEMA,
-            ).write.mode("append").parquet(os.path.join(self.out_dir, "lineage"))
+            local_frame(spark, lineage_rows, LINEAGE_SCHEMA).write.mode("append").parquet(
+                os.path.join(self.out_dir, "lineage"))
         if scorecard_rows:
             # reviewer-facing artifact beside the parquet sinks: the
             # (unit[/partition] × check) failure matrix with total

@@ -28,7 +28,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from anomalydetection_spark.checks.base import Check, VIOLATION_KEY_COL, verdict
+from anomalydetection_spark.checks.base import Check, verdict
 from anomalydetection_spark.functions.stats_math import chi2_ppf
 
 
@@ -130,15 +130,13 @@ class RobustZScoreCheck(Check):
         scale = 1.4826 * (self._mad if self._mad else 1e-12)
         return F.abs(F.col(self.column) - F.lit(self._median)) / F.lit(scale)
 
-    def violations(self, df: DataFrame) -> DataFrame | None:
+    def row_violation(self, df: DataFrame) -> tuple[Column, list[tuple[str, Column]]]:
         if self._median is None or self._mad is None:
             self._fit(df)
-        return (
-            df.filter(self._z() > self.threshold)
-            .withColumn("severity", severity_expr(self._z(), self._sev))
-            .select(*self.keys, "severity")
-            .withColumn(VIOLATION_KEY_COL, F.lit(self.name))
-        )
+        return self._z() > self.threshold, [
+            *[(k, F.col(k)) for k in self.keys],
+            ("severity", severity_expr(self._z(), self._sev)),
+        ]
 
 
 def severity_expr(deviation: Column, cutoffs: tuple[float, float] | None) -> Column:
@@ -289,7 +287,7 @@ class MahalanobisCheck(Check):
             )
         ]
 
-    def violations(self, df: DataFrame) -> DataFrame | None:
+    def row_violation(self, df: DataFrame) -> tuple[Column, list[tuple[str, Column]]]:
         if self._mu is None:
             stats = df.agg(*self.stats_exprs()).first().asDict()
             self._solve(stats)
@@ -300,9 +298,7 @@ class MahalanobisCheck(Check):
             ).first()["sq"]
             if sq is not None:
                 self._sev = (float(sq[0]), float(sq[1]))
-        return (
-            df.filter(self.md2_expr() > self.cutoff)
-            .withColumn("severity", severity_expr(self.md2_expr(), self._sev))
-            .select(*self.keys, "severity")
-            .withColumn(VIOLATION_KEY_COL, F.lit(self.name))
-        )
+        return self.md2_expr() > self.cutoff, [
+            *[(k, F.col(k)) for k in self.keys],
+            ("severity", severity_expr(self.md2_expr(), self._sev)),
+        ]

@@ -13,6 +13,10 @@ Here every check is a declarative object that contributes:
      (tiny) stats row, one verdict dict per constraint.
   3. ``violations(df)`` — an OPTIONAL lazy DataFrame of offending rows
      (never collected by the engine; written to the violations sink).
+     A check whose violations are a plain per-row predicate plus a
+     projection states them once as ``row_violation(df)``; its
+     ``violations()`` derives from it, and the suite reads every such
+     check in ONE scan of the table.
   4. ``run_extra(df)``  — for checks that genuinely need their own job
      (grouped uniqueness, referential anti-join, drift histograms).
 
@@ -25,6 +29,7 @@ from __future__ import annotations
 import abc
 from typing import Any
 
+import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 # One row per (partition, check, metric). `partition` is the string-ified
@@ -130,9 +135,31 @@ class Check(abc.ABC):
         """Evaluate post-round ``rnd`` results."""
         return []
 
+    def row_violation(
+        self, df: DataFrame
+    ) -> tuple[Column, list[tuple[str, Column]]] | None:
+        """``(condition, [(name, Column), ...])`` when this check's
+        violation rows are exactly ``df.filter(condition)`` projected to
+        the named columns (the ``_check`` tag is added by the caller);
+        ``None`` when they need a join, a shuffle or a cached frame.
+        Fits an unfitted model first, as ``violations()`` would."""
+        return None
+
     def violations(self, df: DataFrame) -> DataFrame | None:
         """Lazy DataFrame of violating rows (key columns only), or None."""
-        return None
+        rv = self.row_violation(df)
+        if rv is None:
+            return None
+        cond, cols = rv
+        return df.filter(cond).select(
+            *[c.alias(n) for n, c in self.tagged(cols).items()]
+        )
+
+    def tagged(self, cols: list[tuple[str, Column]]) -> dict[str, Column]:
+        """A ``row_violation`` projection plus the ``_check`` tag; a
+        ``_check`` already projected is replaced in place, as
+        ``withColumn`` replaces it."""
+        return dict([*cols, (VIOLATION_KEY_COL, F.lit(self.name))])
 
     def run_extra(self, df: DataFrame, stats: dict[str, Any] | None = None) -> list[dict[str, Any]]:
         """Verdicts that genuinely need their own Spark job shape

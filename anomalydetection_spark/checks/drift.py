@@ -13,7 +13,8 @@ bin identically), then compute
 Exact KS needs a global sort; the binned version is one ``groupBy`` over
 a flat bucket id — a single shuffle of (#groups × #bins) rows regardless
 of table size — with error bounded by the max per-bin mass (documented in
-SURVEY.md §4.2.4).
+SURVEY.md §4.2.4). A suite bins every DriftCheck that shares ``group_cols``
+in ONE such job (``binned_counts``), whatever the number of features.
 """
 
 from __future__ import annotations
@@ -56,6 +57,40 @@ def histogram(
         .groupBy(*group_cols, "bin")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+    return out
+
+
+def binned_counts(
+    df: DataFrame,
+    specs: Sequence[tuple[Column, float, float, int]],
+    group_cols: Sequence[str] = (),
+) -> list[dict[tuple, dict[int, int]]]:
+    """Fixed-width histograms of several values in ONE job: each row is
+    stacked into one (feature, bin) entry per ``(value, lo, hi, nbins)``
+    spec, NULL values dropped as ``histogram`` drops them, then a single
+    ``groupBy(*group_cols, feature, bin).count()``. The frame is scanned
+    once for all specs (a ``length(bytes)`` feature reads ``bytes`` once,
+    other columns come along in the same scan) and only (group, feature,
+    bin) count partials shuffle. Returns, per spec, ``{group key tuple:
+    {bin: n}}``."""
+    entries = [
+        F.struct(
+            F.lit(i).alias("_feature"),
+            F.when(v.isNotNull(), bucket_expr(v, lo, hi, nbins)).alias("_bin"),
+        )
+        for i, (v, lo, hi, nbins) in enumerate(specs)
+    ]
+    rows = (
+        df.select(*group_cols, F.inline(F.array(*entries)))
+        .filter(F.col("_bin").isNotNull())
+        .groupBy(*group_cols, "_feature", "_bin")
+        .count()
+        .collect()
+    )
+    out: list[dict[tuple, dict[int, int]]] = [{} for _ in specs]
+    for r in rows:
+        key = tuple(r[g] for g in group_cols)
+        out[r["_feature"]].setdefault(key, {})[r["_bin"]] = r["count"]
     return out
 
 
@@ -151,14 +186,19 @@ class DriftCheck(Check):
         cols = self.expr_cols if self.expr is not None else [self.column]
         return [*cols, *self.group_cols]
 
+    def spec(self) -> tuple[Column, float, float, int]:
+        """``(value, lo, hi, nbins)`` for ``binned_counts``."""
+        value = self.expr if self.expr is not None else F.col(self.column)
+        return value, self.lo, self.hi, self.nbins
+
     def run_extra(self, df: DataFrame, stats: dict[str, Any] | None = None) -> list[dict[str, Any]]:
-        target = self.expr if self.expr is not None else self.column
-        hist = histogram(df, target, self.lo, self.hi, self.nbins, self.group_cols)
-        rows = hist.collect()
-        by_group: dict[tuple, dict[int, int]] = {}
-        for r in rows:
-            key = tuple(r[g] for g in self.group_cols)
-            by_group.setdefault(key, {})[r["bin"]] = r["n"]
+        # standalone: the suite batches every DriftCheck of one group_cols
+        # set into a single binned_counts job and calls drift_verdicts
+        return self.drift_verdicts(binned_counts(df, [self.spec()], self.group_cols)[0])
+
+    def drift_verdicts(self, by_group: dict[tuple, dict[int, int]]) -> list[dict[str, Any]]:
+        """PSI / KS (/ EMD) verdicts per group from this check's binned
+        counts against its baseline."""
         out: list[dict[str, Any]] = []
         for key, counts in sorted(by_group.items()):
             base = self.baseline.get(key)

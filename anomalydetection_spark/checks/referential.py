@@ -47,19 +47,19 @@ class ReferentialCheck(Check):
         return [self.fk]
 
     def _orphans(self, df: DataFrame) -> DataFrame:
-        if isinstance(self.dim, DataFrame):
-            dim = self.dim.select(F.col(self.pk).alias(self.fk)).distinct()
-            return df.join(F.broadcast(dim), on=self.fk, how="left_anti")
-        return df.filter(
-            ~F.coalesce(F.col(self.fk).isin(list(self.dim)), F.lit(False))
-        )
+        dim = self.dim.select(F.col(self.pk).alias(self.fk)).distinct()
+        return df.join(F.broadcast(dim), on=self.fk, how="left_anti")
+
+    def _orphan(self) -> Column:
+        """Constant-list dimension: the orphan predicate."""
+        return ~F.coalesce(F.col(self.fk).isin(list(self.dim)), F.lit(False))
 
     # constant-list dimension → pure scan-side predicate: the orphan count
     # folds into the fused pass (per-partition verdicts come for free)
     def stats_exprs(self) -> list[Column]:
         if isinstance(self.dim, DataFrame):
             return []
-        bad = ~F.coalesce(F.col(self.fk).isin(list(self.dim)), F.lit(False))
+        bad = self._orphan()
         return [
             F.sum(bad.cast("long")).alias(f"{self._slug}__orphans"),
             F.count(F.lit(1)).alias(f"{self._slug}__rows"),
@@ -87,7 +87,14 @@ class ReferentialCheck(Check):
             verdict(self.name, self.fk, "orphan_count", float(orphan_rows)),
         ]
 
+    def row_violation(self, df: DataFrame) -> tuple[Column, list[tuple[str, Column]]] | None:
+        if isinstance(self.dim, DataFrame):
+            return None  # broadcast anti-join: its own violation branch
+        return self._orphan(), [(k, F.col(k)) for k in self.keys]
+
     def violations(self, df: DataFrame) -> DataFrame | None:
+        if not isinstance(self.dim, DataFrame):
+            return super().violations(df)
         return (
             self._orphans(df)
             .select(*self.keys)

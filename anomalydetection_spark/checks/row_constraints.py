@@ -9,7 +9,8 @@ single boolean Column, so:
   * its violation COUNT folds into the suite's fused aggregation as
     ``sum(cast(violated as long))`` — zero extra scans;
   * its violation ROWS are a lazy ``df.filter(violated)`` projection that
-    Catalyst pushes into the parquet/Iceberg scan.
+    Catalyst pushes into the parquet/Iceberg scan (``row_violation``; a
+    suite reads every such check in one scan).
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from typing import Any, Callable, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from anomalydetection_spark.checks.base import Check, VIOLATION_KEY_COL, verdict
+from anomalydetection_spark.checks.base import Check, verdict
 
 
 class PredicateCheck(Check):
@@ -88,11 +89,12 @@ class PredicateCheck(Check):
             verdict(self.name, self.column, "violation_rate", rate, None, self.max_violation_rate)
         ]
 
-    def violations(self, df: DataFrame) -> DataFrame | None:
-        out = df.filter(self.violated())
+    def row_violation(self, df: DataFrame) -> tuple[Column, list[tuple[str, Column]]]:
         if self.keys:
-            out = out.select(*self.keys)
-        return out.withColumn(VIOLATION_KEY_COL, F.lit(self.name))
+            cols = [(k, F.col(k)) for k in self.keys]
+        else:  # whole row; quoted so dotted names stay top-level columns
+            cols = [(c, F.col(f"`{c}`")) for c in df.columns]
+        return self.violated(), cols
 
 
 class RowCountCheck(Check):

@@ -9,9 +9,14 @@ caption, phash)``:
   (image_id, phash) → referential (fmt) → robust-z / Mahalanobis on the
   metadata feature vector → drift vs baseline histograms → decode/PSNR.
 
-Job count is O(#check-families), not O(#checks): stats-class checks share
-ONE fused aggregation; the bytes column is touched only by the map-only
-decode stage.
+Job count is fixed per unit, not O(#checks): stats-class checks share
+ONE fused aggregation, the three drift features ONE histogram job, and
+the violations sink ONE write whose plan scans the table 4 times (all
+row-level checks in one scan, 2 for the uniqueness semi-join, 1 for the
+decode source) — about 19 Spark jobs per checkpoint unit, sinks
+included (perfbench ``resumable_run --trace 1``). The bytes
+column is touched only by the map-only decode stage and the byte-length
+drift feature, both over the raw scan.
 """
 
 from __future__ import annotations
@@ -81,23 +86,21 @@ def drift_baseline_histograms(
 ) -> dict[str, dict[tuple, list[int]]]:
     """Baseline histograms from a reference snapshot, one entry per drift
     feature, keyed by group tuple — feed to ``build_image_suite``'s
-    ``drift_baselines``. One histogram job per feature (each a map-side
-    partial count; at most #groups × nbins rows shuffle)."""
-    from anomalydetection_spark.checks.drift import histogram
+    ``drift_baselines``. ONE histogram job for all features (a map-side
+    partial count; at most #groups × #features × nbins rows shuffle)."""
+    from anomalydetection_spark.checks.drift import binned_counts
 
-    out: dict[str, dict[tuple, list[int]]] = {}
-    for feat in features:
-        cfg = DRIFT_FEATURES[feat]
-        target = cfg["expr"]() if "expr" in cfg else feat
-        rows = histogram(
-            images, target, cfg["lo"], cfg["hi"], cfg["nbins"], list(group_cols)
-        ).collect()
-        by_group: dict[tuple, list[int]] = {}
-        for r in rows:
-            key = tuple(r[g] for g in group_cols)
-            by_group.setdefault(key, [0] * cfg["nbins"])[r["bin"]] = r["n"]
-        out[feat] = by_group
-    return out
+    cfgs = [DRIFT_FEATURES[feat] for feat in features]
+    specs = [
+        (cfg["expr"]() if "expr" in cfg else F.col(feat), cfg["lo"], cfg["hi"], cfg["nbins"])
+        for feat, cfg in zip(features, cfgs)
+    ]
+    counts = binned_counts(images, specs, list(group_cols))
+    return {
+        feat: {key: [bins.get(i, 0) for i in range(cfg["nbins"])]
+               for key, bins in by_group.items()}
+        for feat, cfg, by_group in zip(features, cfgs, counts)
+    }
 
 
 def build_image_suite(

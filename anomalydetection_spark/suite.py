@@ -3,9 +3,12 @@
 Lifecycle (SURVEY.md §3.4): build checks → ONE fused aggregation job
 computes every stats-class metric (optionally grouped by partition
 columns for per-partition verdicts) → driver evaluates thresholds on the
-tiny collected stats → join/group-class checks run their own O(1) jobs →
-verdicts / violations / metrics come back as DataFrames for the caller to
-write to its sink tables.
+tiny collected stats → shared post rounds (one agg per round) → ONE
+histogram job per drift ``group_cols`` set → join/group-class checks run
+their own O(1) jobs → verdicts (as driver-held rows AND an Arrow-built
+DataFrame) and one lazy violations frame come back for the caller to
+write to its sink tables. The violations frame reads every row-level
+check in ONE scan; only join/cache-backed checks add a union branch.
 
 The reference's equivalent is the reactive graph of eager data.frames and
 shinyalert asserts (``/root/reference/PRIME_App/server.R:951-1092``); the
@@ -15,15 +18,30 @@ semantics viable at 10^12 rows.
 
 from __future__ import annotations
 
+import operator
 import time
 from dataclasses import dataclass
 from functools import reduce
 from typing import Any, Sequence
 
+import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from anomalydetection_spark.checks.base import Check, VERDICT_SCHEMA
+from anomalydetection_spark.checks.drift import DriftCheck, binned_counts
+
+
+def local_frame(spark: SparkSession, rows: list[dict[str, Any]], schema: str) -> DataFrame:
+    """DataFrame over driver-held ``rows`` (dicts keyed by field name),
+    shipped to the JVM as Arrow record batches. A list of tuples would be
+    pickled through a Python RDD, so every job over it — each sink write
+    — would start Python workers to unpickle a few hundred rows."""
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, schema=struct)
 
 
 @dataclass
@@ -32,11 +50,14 @@ class SuiteResult:
     violations: DataFrame | None  # offending rows, tagged with check name
     metrics: dict[str, Any]  # raw collected stats (global slice)
     elapsed_sec: float
+    # the rows behind ``verdicts``, already on the driver: read these
+    # instead of collecting ``verdicts`` back
+    verdict_rows: list[dict[str, Any]]
     suite: "ValidationSuite | None" = None  # owner, for release()
 
     @property
     def passed(self) -> bool:
-        return self.verdicts.filter(~F.col("passed")).limit(1).count() == 0
+        return all(r["passed"] for r in self.verdict_rows)
 
     def release(self) -> None:
         """Free check-held persisted intermediates (the decode verdict
@@ -178,39 +199,22 @@ class ValidationSuite:
                             v.update(table=self.table_name, partition="")
                             verdict_rows.append(v)
 
+            drift = self._drift_verdicts(df)
             for c in self.checks:
-                target = df if c.use_original else stats_df
-                for v in c.run_extra(target, global_stats):
+                if id(c) in drift:
+                    extra = drift[id(c)]
+                else:
+                    extra = c.run_extra(df if c.use_original else stats_df, global_stats)
+                for v in extra:
                     v.update(table=self.table_name, partition="")
                     verdict_rows.append(v)
 
-            verdicts = spark.createDataFrame(
-                [
-                    (
-                        r["table"], r["partition"], r["check"], r["column"],
-                        r["metric"], r["value"], r["lo"], r["hi"], r["passed"],
-                    )
-                    for r in verdict_rows
-                ],
-                schema=VERDICT_SCHEMA,
-            )
-
-            violations = None
-            if with_violations:
-                vdfs = []
-                for c in self.checks:
-                    v = c.violations(df)
-                    if v is not None:
-                        vdfs.append(v)
-                if vdfs:
-                    violations = reduce(
-                        lambda a, b: a.unionByName(b, allowMissingColumns=True), vdfs
-                    )
             return SuiteResult(
-                verdicts=verdicts,
-                violations=violations,
+                verdicts=local_frame(spark, verdict_rows, VERDICT_SCHEMA),
+                violations=self._violations(df) if with_violations else None,
                 metrics=global_stats,
                 elapsed_sec=time.time() - t0,
+                verdict_rows=verdict_rows,
                 suite=self,
             )
         finally:
@@ -223,6 +227,74 @@ class ValidationSuite:
                 # frame shares the run's single decode pass (call
                 # ``release()`` after consuming it).
                 self.release()
+
+    def _drift_verdicts(self, df: DataFrame) -> dict[int, list[dict[str, Any]]]:
+        """Verdicts of every DriftCheck, keyed by ``id(check)``: ONE
+        ``binned_counts`` job per distinct ``group_cols`` set over the raw
+        frame, instead of one histogram job per check."""
+        groups: dict[tuple[str, ...], list[DriftCheck]] = {}
+        for c in self.checks:
+            if isinstance(c, DriftCheck):
+                groups.setdefault(tuple(c.group_cols), []).append(c)
+        out: dict[int, list[dict[str, Any]]] = {}
+        for group_cols, checks in groups.items():
+            counts = binned_counts(df, [c.spec() for c in checks], group_cols)
+            for c, by_group in zip(checks, counts):
+                out[id(c)] = c.drift_verdicts(by_group)
+        return out
+
+    def _violations(self, df: DataFrame) -> DataFrame | None:
+        """Every check's violation rows as one lazy frame.
+
+        Checks with a ``row_violation`` share ONE scan:
+        ``df.filter(c1 | c2 | …)`` then ``inline`` of the concatenation
+        of, per check, ``[struct(cols_i…, name_i AS _check)]`` where
+        ``c_i`` holds and ``[]`` elsewhere — so a row that breaks k checks
+        still yields k rows. (Empty arrays rather than NULL elements
+        filtered out: ``inline`` over an array that may hold NULLs makes
+        every output column nullable, which would change the sink's
+        parquet schema.) The conditions are not wrapped in
+        ``coalesce``: ``NULL OR TRUE`` is TRUE, so the row set is
+        unchanged and an OR of pushable atoms still reaches the scan.
+        The other checks (uniqueness semi-join, DataFrame-dimension
+        anti-join, the cached decode frame) keep their own union branch.
+        Columns come out in the order, and with the types, of chaining
+        each check's own ``violations()`` with
+        ``unionByName(allowMissingColumns=True)``."""
+        rowwise: list[tuple[Column, dict[str, Column]]] = []
+        branches: list[DataFrame] = []
+        order: list[str] = []  # first-appearance order over the checks
+        for c in self.checks:
+            rv = c.row_violation(df)
+            if rv is not None:
+                cond, cols = rv
+                named = c.tagged(cols)
+                rowwise.append((cond, named))
+                names = list(named)
+            else:
+                v = c.violations(df)
+                if v is None:
+                    continue
+                branches.append(v)
+                names = v.columns
+            order.extend(n for n in names if n not in order)
+        out = None
+        if rowwise:
+            fields = [n for n in order if any(n in cols for _, cols in rowwise)]
+            tagged = F.flatten(F.array(*[
+                F.when(cond, F.array(F.struct(*[cols.get(n, F.lit(None)).alias(n)
+                                                for n in fields])))
+                .otherwise(F.array())
+                for cond, cols in rowwise
+            ]))
+            out = df.filter(reduce(operator.or_, [cond for cond, _ in rowwise])).select(
+                F.inline(tagged)
+            )
+        for b in branches:
+            out = b if out is None else out.unionByName(b, allowMissingColumns=True)
+        if out is not None and out.columns != order:
+            out = out.select(*[F.col(f"`{n}`") for n in order])
+        return out
 
     def release(self) -> None:
         """Free persisted intermediates held by checks (e.g. the decode

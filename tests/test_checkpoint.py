@@ -441,3 +441,47 @@ def test_scorecard_csv_quotes_commas_in_labels(tmp_path):
     assert by_label["region=US, East"] == ["region=US, East", "1", "1"]
     assert by_label["region=EU"] == ["region=EU", "0", "0"]
     assert by_label["TOTAL"] == ["TOTAL", "1", "1"]
+
+
+def test_observed_violation_rows_equal_sink_count_without_reread(
+        spark, image_table, tmp_path, monkeypatch):
+    """Each unit's violation rows are counted by DataFrame.observe during
+    the sink write: the count equals a count() of the unit's sink, lineage
+    and ledger carry it, and run() never reads a violations sink back."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    out = str(tmp_path / "out")
+    vroot = os.path.join(out, "violations")
+    reads = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kwargs):
+        reads.extend(str(p) for p in paths)
+        return real(self, *paths, **kwargs)
+
+    df = spark.read.parquet(image_table)
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    report = CheckpointedRunner(_suite(), out, bucket_key="image_id", n_buckets=4).run(
+        df, input_path=image_table)
+    monkeypatch.undo()
+    assert not [p for p in reads if p.startswith(vroot)]
+
+    counts = {u.unit: u.violation_rows for u in report.units}
+    assert sum(counts.values()) > 0
+    for unit, n in counts.items():
+        assert n == spark.read.parquet(os.path.join(vroot, f"unit={unit}")).count()
+        assert json.load(open(os.path.join(out, "_ledger", f"{unit}.json")))[
+            "violation_rows"] == n
+    lineage = spark.read.parquet(os.path.join(out, "lineage")).collect()
+    assert {r["unit"]: r["violation_rows"] for r in lineage} == counts
+
+
+def test_observed_violation_rows_zero_for_clean_unit(spark, tmp_path):
+    df = spark.createDataFrame(
+        [("a", "img_1", None), ("a", "img_2", "ok"), ("b", "img_3", "ok")],
+        "u string, image_id string, caption string")
+    out = str(tmp_path / "out")
+    suite = ValidationSuite([NotNullCheck("caption", keys=["image_id"])], "t")
+    report = CheckpointedRunner(suite, out, unit_col="u").run(df)
+    assert {u.unit: u.violation_rows for u in report.units} == {"u=a": 1, "u=b": 0}
+    assert spark.read.parquet(os.path.join(out, "violations", "unit=u=b")).count() == 0

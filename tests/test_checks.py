@@ -4,6 +4,8 @@ flags exactly those and nothing else."""
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -15,6 +17,7 @@ from anomalydetection_spark.checks import (
     MahalanobisCheck,
     NotNullCheck,
     NotInSetCheck,
+    PredicateCheck,
     RangeCheck,
     ReferentialCheck,
     RlikeCheck,
@@ -127,6 +130,14 @@ def test_column_stats_constraints(spark, images):
     ).run(images)
     bad = {r["metric"] for r in res.verdicts.filter("passed = false").collect()}
     assert bad == {"max"}
+    # `passed` reads the driver-held verdict rows, never the frame
+    res.verdicts = None
+    assert res.passed is False
+    ok = ValidationSuite([ColumnStatsCheck("w", constraints={"null_rate": (None, 0.0)})],
+                         "images").run(images)
+    assert ok.verdicts.filter("not passed").count() == 0
+    ok.verdicts = None
+    assert ok.passed is True
 
 
 def test_drift_detects_shift(spark):
@@ -517,3 +528,178 @@ def test_xlsx_optional_r_attributes_and_row_gaps(spark, tmp_path):
     assert df.columns == ["id", "name"]
     got = [(r["id"], r["name"]) for r in df.collect()]
     assert got == [("1", "first"), (None, None), ("2", "after-gap")]
+
+
+# -- one-scan violations and shared drift histograms ------------------------
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _assert_same_violations(got, want):
+    """Same column names, order and types (nullability included, as the
+    parquet sink records it) and the same row multiset."""
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+
+
+@pytest.fixture(scope="module")
+def planted(spark):
+    """Rows with planted, overlapping violations: img_b0 breaks four
+    checks at once, img_b1 carries a NULL fmt (InSetCheck's predicate is
+    NULL) and img_b2 a NULL w (RangeCheck's is NULL; robust-z and
+    Mahalanobis scores are NULL, so neither flags it)."""
+    rows = [(f"img_{i:03d}", 100 + i % 7, 100 + i % 5, "jpeg" if i % 4 else "png",
+             f"caption {i}") for i in range(120)]
+    rows += [
+        ("img_b0", 9000, 9000, "bmp", None),
+        ("img_b1", 104, 102, None, "null fmt"),
+        ("img_b2", None, 103, "png", "null w"),
+        ("img_000", 101, 101, "jpeg", "dup id"),
+    ]
+    return spark.createDataFrame(
+        rows, "image_id string, w int, h int, fmt string, caption string").cache()
+
+
+def _union_of_own_violations(checks, df):
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  [v for v in (c.violations(df) for c in checks) if v is not None])
+
+
+def test_suite_violations_equal_union_of_check_violations(spark, planted):
+    """The suite reads every row-level check in one scan; the result must
+    be what chaining each check's own violations() with
+    unionByName(allowMissingColumns=True) gives."""
+    dim = spark.createDataFrame([("jpeg",), ("png",), ("webp",)], "fmt string")
+    checks = [
+        UniquenessCheck(["image_id"]),
+        NotNullCheck("caption", keys=["image_id"]),
+        ReferentialCheck("fmt", ["jpeg", "png"], keys=["fmt"]),
+        # keys=None projects the whole row
+        PredicateCheck("caption_short", lambda: F.length("caption") < 12,
+                       columns=["caption"]),
+        InSetCheck("fmt", ["jpeg", "png", "webp"], keys=["image_id"]),
+        RangeCheck("w", 16, 4096, keys=["image_id"]),
+        # DataFrame dimension: stays a broadcast anti-join branch
+        ReferentialCheck("fmt", dim, keys=["image_id", "fmt"]),
+        RobustZScoreCheck("w", threshold=10.0, keys=["image_id"]),
+        MahalanobisCheck(["w", "h"], alpha=0.999, keys=["image_id"]),
+    ]
+    res = ValidationSuite(checks, "images").run(planted)
+    # the suite fitted the models; each check's own frame reuses them
+    want = _union_of_own_violations(checks, planted)
+    assert want.columns == ["image_id", "_check", "fmt", "w", "h", "caption", "severity"]
+    _assert_same_violations(res.violations, want)
+
+    by_id: dict[str, list[str]] = {}
+    for r in res.violations.collect():
+        by_id.setdefault(r["image_id"], []).append(r["_check"])
+    # one row per broken check, not one per row
+    assert sorted(by_id["img_b0"]) == sorted([
+        "caption_short", "not_null:caption", "in_set:fmt", "range:w",
+        "referential:fmt", "robust_z:w", "mahalanobis:w,h"])
+    # NULL predicates: InSetCheck / RangeCheck flag them, the scores do not
+    assert sorted(by_id["img_b1"]) == ["in_set:fmt", "referential:fmt"]
+    assert by_id["img_b2"] == ["range:w"]
+    assert by_id["img_000"] == ["unique:image_id"] * 2
+    # the list dimension is keyed on fmt only: bmp and the NULL fmt
+    assert sorted(by_id[None]) == ["referential:fmt"] * 2
+
+
+def test_suite_violations_clean_input_is_empty_with_union_schema(spark, planted):
+    """No violations at all: an empty frame with the chain's schema. The
+    uniqueness branch comes first here, so its `h` column leads the
+    chain's order although the one-scan branch never projects it."""
+    clean = planted.filter(F.col("image_id").rlike(r"^img_\d+$")
+                           & (F.col("image_id") != "img_000"))
+    dim = spark.createDataFrame([("jpeg",), ("png",), ("webp",)], "fmt string")
+    checks = [
+        UniquenessCheck(["image_id", "h"]),
+        NotNullCheck("caption", keys=["image_id"]),
+        RobustZScoreCheck("w", threshold=10.0, keys=["image_id"]),
+        ReferentialCheck("fmt", dim, keys=["image_id", "fmt"]),
+        MahalanobisCheck(["w", "h"], alpha=0.999, keys=["image_id"]),
+    ]
+    res = ValidationSuite(checks, "images").run(clean)
+    want = _union_of_own_violations(checks, clean)
+    assert want.columns == ["image_id", "h", "_check", "severity", "fmt"]
+    _assert_same_violations(res.violations, want)
+    assert res.violations.count() == 0
+    assert res.passed
+
+
+def _drift_frames(spark):
+    """test_drift_detects_shift's data plus a NULL feature value, and a
+    second feature and a group column."""
+    def frame(shift):
+        body = spark.range(0, 4000).select(
+            ((F.col("id") % 100) + shift).cast("double").alias("x"),
+            ((F.col("id") * 7) % 50).cast("double").alias("y"),
+            F.when(F.col("id") % 3 == 0, "a").otherwise("b").alias("g"))
+        return body.unionByName(spark.createDataFrame(
+            [(None, 1.0, "a")], "x double, y double, g string"))
+    return frame(0), frame(40)
+
+
+def _drift_checks(base, group_cols=()):
+    out = []
+    for col, lo, hi in (("x", 0, 200), ("y", 0, 100)):
+        counts = {}
+        for r in histogram(base, col, lo, hi, 20, list(group_cols)).collect():
+            key = tuple(r[g] for g in group_cols)
+            counts.setdefault(key, [0] * 20)[r["bin"]] = r["n"]
+        out.append(DriftCheck(col, lo, hi, 20, counts, group_cols=group_cols,
+                              max_psi=0.1, max_ks=0.1, max_emd_bins=1.0))
+    return out
+
+
+def test_shared_drift_histograms_match_per_check_path(spark):
+    """All DriftChecks of one group_cols set share ONE histogram job; its
+    PSI/KS/EMD verdicts are bit-identical to each check's own path and to
+    `histogram()` counts."""
+    base, shifted = _drift_frames(spark)
+    checks = _drift_checks(base)
+    for df in (base, shifted):
+        own = [v for c in checks for v in c.run_extra(df)]
+        ref = []
+        for c in checks:
+            counts = {r["bin"]: r["n"] for r in
+                      histogram(df, c.column, c.lo, c.hi, c.nbins).collect()}
+            ref += c.drift_verdicts({(): counts})
+        shared = [v for v in ValidationSuite(checks, "t").run(df).verdict_rows
+                  if v["check"].startswith("drift:")]
+        for v in shared:
+            del v["table"], v["partition"]
+        assert shared == own == ref  # exact float equality, not approx
+        assert {v["metric"] for v in own} == {"psi", "ks", "emd_bins"}
+    drifted = [v for v in checks[0].run_extra(shifted) if not v["passed"]]
+    assert drifted  # x shifted by 40 is flagged
+
+
+def test_drift_histogram_job_per_group_set(spark, monkeypatch):
+    """A spy on the suite's histogram helper: one binned_counts call (one
+    groupBy job) per distinct group_cols set per run — two checks on ()
+    share one, the two on ("g",) share another."""
+    import anomalydetection_spark.suite as suite_mod
+
+    calls = []
+    real = suite_mod.binned_counts
+
+    def spy(df, specs, group_cols=()):
+        calls.append((tuple(group_cols), len(specs)))
+        return real(df, specs, group_cols)
+
+    monkeypatch.setattr(suite_mod, "binned_counts", spy)
+    base, shifted = _drift_frames(spark)
+    flat, grouped = _drift_checks(base), _drift_checks(base, ("g",))
+    res = ValidationSuite([flat[0], grouped[0], flat[1], grouped[1]], "t").run(shifted)
+    assert sorted(calls) == [((), 2), (("g",), 2)]
+    got = [v for v in res.verdict_rows if v["check"].startswith("drift:")]
+    for v in got:
+        del v["table"], v["partition"]
+    # verdict order follows the check order, as the per-check loop had it
+    monkeypatch.setattr(suite_mod, "binned_counts", real)
+    want = [v for c in (flat[0], grouped[0], flat[1], grouped[1])
+            for v in c.run_extra(shifted)]
+    assert got == want
+    assert {v["column"] for v in got} == {"x", "y", "x@a", "x@b", "y@a", "y@b"}

@@ -72,6 +72,54 @@ def test_list_dim_referential_is_pure_scan_predicate(spark, images_path):
     assert "Join" not in plan, "constant whitelist must compile to a predicate"
 
 
+def _tree(plan: str) -> str:
+    """The operator tree of a formatted plan (before the node details)."""
+    return plan.split("\n\n", 1)[0]
+
+
+def test_image_suite_violations_read_one_scan_for_row_level_checks(spark, images_path):
+    """Every row-level check of the image suite (not-null, rlike, in-set,
+    range, list-dimension referential, robust-z, Mahalanobis) is served
+    by ONE parquet scan: 4 scans under the Union — that one, the two of
+    the uniqueness semi-join and the decode source — instead of one per
+    check (12). No Exchange carries the payload bytes."""
+    from anomalydetection_spark.plans.image_suite import build_image_suite
+
+    df = spark.read.parquet(images_path)
+    suite = build_image_suite(["jpeg", "png", "webp"], with_decode=True)
+    res = suite.run(df, spark)
+    try:
+        plan = plan_of(res.violations)
+    finally:
+        suite.release()
+    tree = _tree(plan)
+    assert "Union" in tree
+    assert tree.count("Scan parquet") == 4
+    assert tree.count("Generate") == 1  # the one-scan branch's inline
+    exchanges = re.findall(r"\(\d+\) (?:Broadcast)?Exchange\n([^\n]*)", plan)
+    assert exchanges  # the uniqueness branch shuffles its keys
+    for inputs in exchanges:
+        assert "bytes#" not in inputs, inputs
+
+
+def test_one_scan_violation_filter_pushes_down_or_of_atoms(spark, images_path):
+    """The one-scan filter is a bare OR of the checks' conditions (no
+    coalesce around it), so pushable atoms still reach the scan."""
+    from anomalydetection_spark.checks import NotNullCheck
+    from anomalydetection_spark.suite import ValidationSuite
+
+    df = spark.read.parquet(images_path)
+    suite = ValidationSuite([NotNullCheck("caption", keys=["image_id"]),
+                             RangeCheck("w", 16, 2048, keys=["image_id"]),
+                             RangeCheck("h", 16, 2048, keys=["image_id"])])
+    plan = plan_of(suite.run(df, spark).violations)
+    assert _tree(plan).count("Scan parquet") == 1
+    pushed = re.search(r"PushedFilters: \[([^\]]*)\]", plan).group(1)
+    assert pushed.startswith("Or(") and "caption" in pushed and "h" in pushed
+    schema = re.search(r"ReadSchema: struct<([^>]*)>", plan).group(1)
+    assert "bytes" not in schema
+
+
 def test_decode_path_is_map_only(spark, images_path):
     df = spark.read.parquet(images_path)
     plan = plan_of(decode_results(df))
