@@ -61,9 +61,6 @@ class RobustZScoreCheck(Check):
         self._mad: float | None = None
         self._sev: tuple[float, float] | None = None  # (q80, q90) of |z|
 
-    def required_columns(self) -> list[str]:
-        return [self.column]
-
     def reset(self) -> None:
         self._median = None
         self._mad = None
@@ -118,8 +115,11 @@ class RobustZScoreCheck(Check):
         ]
 
     def _fit(self, df: DataFrame) -> None:
-        """Standalone fit (outside a suite run)."""
+        """Standalone fit (outside a suite run). A column without a
+        non-NULL value (an empty unit) leaves the model unfitted."""
         med = df.agg(*self.stats_exprs()).first()[f"{self._slug}__median"]
+        if med is None:
+            return
         self._median = float(med)
         q = df.agg(*self.post_exprs(0)).first()[f"{self._slug}__madq"]
         self._mad = float(q[0])
@@ -133,10 +133,22 @@ class RobustZScoreCheck(Check):
     def row_violation(self, df: DataFrame) -> tuple[Column, list[tuple[str, Column]]]:
         if self._median is None or self._mad is None:
             self._fit(df)
+        if self._median is None:
+            return unscored(self.keys)
         return self._z() > self.threshold, [
             *[(k, F.col(k)) for k in self.keys],
             ("severity", severity_expr(self._z(), self._sev)),
         ]
+
+
+def unscored(keys: list[str]) -> tuple[Column, list[tuple[str, Column]]]:
+    """``row_violation`` of a model that cannot be fitted (no non-NULL
+    value, or too few rows for a covariance): no row is an outlier, so
+    no violation rows, with the scored projection's columns."""
+    return F.lit(False), [
+        *[(k, F.col(k)) for k in keys],
+        ("severity", F.lit(None).cast("string")),
+    ]
 
 
 def severity_expr(deviation: Column, cutoffs: tuple[float, float] | None) -> Column:
@@ -207,7 +219,8 @@ class MahalanobisCheck(Check):
 
     def _solve(self, stats: dict[str, Any]) -> None:
         k = len(self.cols)
-        n = stats[f"{self._slug}__n"]
+        # no key at all: a rollup over an empty unit has no grand-total row
+        n = stats.get(f"{self._slug}__n")
         if n is None or n < 2:
             return
         s = np.array([stats[f"{self._slug}__s_{i}"] for i in range(k)], dtype=float)
@@ -258,9 +271,6 @@ class MahalanobisCheck(Check):
     # solved from the fused-pass moments — this check adds zero scans)
     n_post_rounds = 1
 
-    def required_columns(self) -> list[str]:
-        return list(self.cols)
-
     def post_exprs(self, rnd: int) -> list[Column]:
         if self._mu is None:
             return []
@@ -291,6 +301,8 @@ class MahalanobisCheck(Check):
         if self._mu is None:
             stats = df.agg(*self.stats_exprs()).first().asDict()
             self._solve(stats)
+        if self._mu is None:  # fewer than 2 rows: no covariance
+            return unscored(self.keys)
         if self._sev is None:
             sq = df.agg(
                 F.percentile_approx(self.md2_expr(), F.array(F.lit(0.8), F.lit(0.9)),

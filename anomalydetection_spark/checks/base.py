@@ -20,6 +20,9 @@ Here every check is a declarative object that contributes:
   4. ``run_extra(df)``  — for checks that genuinely need their own job
      (grouped uniqueness, referential anti-join, drift histograms).
 
+Each is handed the suite's input frame itself, and a check declares no
+column list: Catalyst prunes each job's scan to the columns it references.
+
 Verdict rows mirror the reference's per-scenario outlier tables
 (``PRIME_App/utils.R:308-407``) reshaped as a constraint ledger.
 """
@@ -83,24 +86,12 @@ class Check(abc.ABC):
     #: by every check, so total scan count is O(max rounds), not O(checks).
     n_post_rounds: int = 0
 
-    #: True → this check's jobs run on the ORIGINAL DataFrame, and its
-    #: columns are excluded from the suite's cached narrow projection
-    #: (decode checks: caching/shuffling the bytes column is the #1 scale
-    #: killer; their stage must stay map-only over the raw scan).
-    use_original: bool = False
-
     #: Set by ``ValidationSuite.run`` to its ``with_violations`` flag
     #: BEFORE any check job runs. Checks whose aggregate and violation
     #: frames can share one expensive pass (the decode check) persist
     #: that intermediate only when a violations consumer exists —
     #: a verdicts-only run must not pay the cache-build cost.
     cache_intermediates: bool = True
-
-    def required_columns(self) -> list[str] | None:
-        """Columns this check's stats/post/extra jobs read. The suite
-        persists only the union of these (column pruning survives the
-        cache). ``None`` = unknown → the suite disables pruning."""
-        return None
 
     def reset(self) -> None:
         """Clear state fitted during a previous ``run()`` (model moments,

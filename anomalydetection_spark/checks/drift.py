@@ -147,11 +147,9 @@ class DriftCheck(Check):
 
     ``expr``: histogram a DERIVED value instead of a raw column (e.g.
     ``F.length('bytes')`` for byte-length drift — north-star feature
-    set: w/h/byte-length histograms). ``expr_cols`` names the columns it
-    reads; when one of them is a payload column the caller sets
-    ``use_original=True`` so the suite keeps it out of the cached narrow
-    projection — the histogram stage is map-only over the raw scan and
-    only (group, bin) count partials ever shuffle.
+    set: w/h/byte-length histograms). The histogram stage is map-only
+    over the raw scan, so even a payload-derived value never shuffles:
+    only (group, bin) count partials do.
     """
 
     def __init__(
@@ -166,8 +164,6 @@ class DriftCheck(Check):
         max_ks: float = 0.15,
         max_emd_bins: float | None = None,
         expr: Column | None = None,
-        expr_cols: Sequence[str] = (),
-        use_original: bool = False,
     ):
         self.column = column
         self.lo, self.hi, self.nbins = lo, hi, nbins
@@ -178,13 +174,7 @@ class DriftCheck(Check):
         # EMD threshold expressed in BIN units (scale-free across configs)
         self.max_emd_bins = max_emd_bins
         self.expr = expr
-        self.expr_cols = list(expr_cols)
-        self.use_original = use_original
         self.name = f"drift:{column}"
-
-    def required_columns(self) -> list[str]:
-        cols = self.expr_cols if self.expr is not None else [self.column]
-        return [*cols, *self.group_cols]
 
     def spec(self) -> tuple[Column, float, float, int]:
         """``(value, lo, hi, nbins)`` for ``binned_counts``."""
@@ -198,9 +188,11 @@ class DriftCheck(Check):
 
     def drift_verdicts(self, by_group: dict[tuple, dict[int, int]]) -> list[dict[str, Any]]:
         """PSI / KS (/ EMD) verdicts per group from this check's binned
-        counts against its baseline."""
+        counts against its baseline, in group-key order, a NULL key
+        element first (``None`` does not compare with a value)."""
         out: list[dict[str, Any]] = []
-        for key, counts in sorted(by_group.items()):
+        by_key = sorted(by_group.items(), key=lambda kv: [(v is not None, v) for v in kv[0]])
+        for key, counts in by_key:
             base = self.baseline.get(key)
             label = self.column if not key else f"{self.column}@{'/'.join(map(str, key))}"
             if base is None:

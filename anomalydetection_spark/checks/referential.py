@@ -43,9 +43,6 @@ class ReferentialCheck(Check):
         self.name = f"referential:{fk}"
         self._slug = f"ref_{fk}"
 
-    def required_columns(self) -> list[str]:
-        return [self.fk]
-
     def _orphans(self, df: DataFrame) -> DataFrame:
         dim = self.dim.select(F.col(self.pk).alias(self.fk)).distinct()
         return df.join(F.broadcast(dim), on=self.fk, how="left_anti")

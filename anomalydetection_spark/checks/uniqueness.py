@@ -80,9 +80,6 @@ class UniquenessCheck(Check):
             )
         ]
 
-    def required_columns(self) -> list[str]:
-        return list(self.keys)
-
     def run_extra(self, df: DataFrame, stats: dict[str, Any] | None = None) -> list[dict[str, Any]]:
         if self.hll_only:
             return []

@@ -66,15 +66,15 @@ def image_schema_check() -> SchemaCheck:
 
 # North-star drift feature set: w / h / byte-length histograms. The
 # byte-length feature histograms length(bytes) map-only over the raw
-# scan (use_original — payload bytes never enter the cache or a shuffle;
-# only (group, bin) count partials move).
+# scan (payload bytes never enter a shuffle; only (group, bin) count
+# partials move).
 DRIFT_FEATURES: dict[str, dict] = {
     "w": dict(lo=16, hi=2048, nbins=64),
     "h": dict(lo=16, hi=2048, nbins=64),
     "byte_length": dict(
         lo=0, hi=65536, nbins=64,
         # thunk: building a Column needs an active session (classic backend)
-        expr=lambda: F.length("bytes"), expr_cols=["bytes"], use_original=True,
+        expr=lambda: F.length("bytes"),
     ),
 }
 
@@ -105,7 +105,6 @@ def drift_baseline_histograms(
 
 def build_image_suite(
     fmt_dim: DataFrame | list,
-    drift_baseline: dict | None = None,
     with_decode: bool = True,
     partition_by: list[str] = ("fmt",),
     drift_baselines: dict[str, dict] | None = None,
@@ -128,8 +127,6 @@ def build_image_suite(
         RobustZScoreCheck("w", threshold=6.0, max_violation_rate=0.01, keys=KEYS),
         MahalanobisCheck(["w", "h"], alpha=0.999, max_violation_rate=0.01, keys=KEYS),
     ]
-    if drift_baseline is not None:  # legacy single-feature (w) form
-        drift_baselines = {"w": drift_baseline, **(drift_baselines or {})}
     for feat, base in (drift_baselines or {}).items():
         cfg = DRIFT_FEATURES[feat]
         checks.append(
@@ -138,8 +135,6 @@ def build_image_suite(
                 baseline=base, group_cols=["fmt"],
                 max_psi=0.2, max_ks=0.15,
                 expr=cfg["expr"]() if "expr" in cfg else None,
-                expr_cols=cfg.get("expr_cols", ()),
-                use_original=cfg.get("use_original", False),
             )
         )
     if with_decode:
@@ -155,13 +150,11 @@ def run_image_validation(
     spark: SparkSession,
     images: DataFrame,
     fmt_dim: DataFrame | list | None = None,
-    drift_baseline: dict | None = None,
     with_decode: bool = True,
     drift_baselines: dict[str, dict] | None = None,
     with_violations: bool = True,
 ) -> SuiteResult:
     if fmt_dim is None:
         fmt_dim = ["jpeg", "png", "webp"]
-    suite = build_image_suite(fmt_dim, drift_baseline, with_decode,
-                              drift_baselines=drift_baselines)
+    suite = build_image_suite(fmt_dim, with_decode, drift_baselines=drift_baselines)
     return suite.run(images, spark, with_violations=with_violations)

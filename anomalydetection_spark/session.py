@@ -13,6 +13,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+MAX_DRIVER_MEM_MB = 12 * 1024
+
+
+def default_driver_mem() -> str:
+    """``min(12g, MemTotal/3)``. The heap is pre-touched (below), so it is
+    resident from JVM start: on a 15 GB host a 12g heap leaves no room
+    for a second engine JVM (a CLI run started as a subprocess), and the
+    kernel kills one of them. A third of the host leaves that room. 12g
+    when ``/proc/meminfo`` cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(MAX_DRIVER_MEM_MB, kb // 3 // 1024)}m"
+
 
 def get_spark(
     app_name: str = "anomalydetection-spark",
@@ -24,7 +40,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback all
     cores).  On a real cluster the caller passes master via spark-submit and
-    this function leaves it untouched.
+    this function leaves it untouched. The driver heap is
+    ``$SPARK_DRIVER_MEM`` when set, else ``default_driver_mem()``.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -36,7 +53,7 @@ def get_spark(
         else:
             shuffle_partitions = 200
 
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "12g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -9,6 +9,8 @@ their own O(1) jobs → verdicts (as driver-held rows AND an Arrow-built
 DataFrame) and one lazy violations frame come back for the caller to
 write to its sink tables. The violations frame reads every row-level
 check in ONE scan; only join/cache-backed checks add a union branch.
+Every job reads the input frame itself, uncached; Catalyst's column
+pruning keeps ``bytes`` out of every job whose expressions do not use it.
 
 The reference's equivalent is the reactive graph of eager data.frames and
 shinyalert asserts (``/root/reference/PRIME_App/server.R:951-1092``); the
@@ -127,38 +129,13 @@ class ValidationSuite:
         g = df.agg(*exprs).first().asDict()
         return g, []
 
-    # ------------------------------------------------------------------
-    def _stats_frame(self, df: DataFrame) -> DataFrame:
-        """Narrow projection feeding every stats/post/extra job.
-
-        Column pruning must survive the cache: persisting the raw frame
-        would materialize payload columns (``bytes``!) that only map-only
-        ``use_original`` checks touch. At 10^12 rows this is the
-        difference between caching ~50 B/row of metadata and ~100 KB/row
-        of pixels."""
-        needed: set[str] = set(self.partition_by)
-        for c in self.checks:
-            if c.use_original:
-                continue
-            rc = c.required_columns()
-            if rc is None:
-                return df  # a check with unknown column needs → no pruning
-            needed.update(rc)
-        existing = [c for c in df.columns if c in needed]
-        return df.select(*existing) if existing else df
-
     def run(
         self,
         df: DataFrame,
         spark: SparkSession | None = None,
         with_violations: bool = True,
-        cache: bool = False,
     ) -> SuiteResult:
-        # cache=False default: the fused design already keeps the suite to
-        # ~4 narrow scans + 1 shuffle, and re-scanning a pruned parquet/
-        # Iceberg projection (vectorized, pushed-down) is usually cheaper
-        # than materializing a columnar cache — and at 10^12 rows caching
-        # is not an option at all. Opt in for small-but-remote inputs.
+        # every job below reads ``df``; Catalyst prunes each scan to its columns
         spark = spark or df.sparkSession
         t0 = time.time()
         for c in self.checks:
@@ -166,11 +143,8 @@ class ValidationSuite:
             # verdicts-only runs skip shared-pass caches (decode results):
             # nothing will re-read them, so building the cache is pure cost
             c.cache_intermediates = with_violations
-        stats_df = self._stats_frame(df)
-        if cache:
-            stats_df = stats_df.persist()
         try:
-            global_stats, per_part = self._fused_stats(stats_df)
+            global_stats, per_part = self._fused_stats(df)
 
             verdict_rows: list[dict[str, Any]] = []
             for c in self.checks:
@@ -192,7 +166,7 @@ class ValidationSuite:
                         exprs.extend(c.post_exprs(rnd))
                 if not exprs:
                     continue
-                post_stats = stats_df.agg(*exprs).first().asDict()
+                post_stats = df.agg(*exprs).first().asDict()
                 for c in self.checks:
                     if c.n_post_rounds > rnd:
                         for v in c.post_verdicts(rnd, post_stats):
@@ -204,7 +178,7 @@ class ValidationSuite:
                 if id(c) in drift:
                     extra = drift[id(c)]
                 else:
-                    extra = c.run_extra(df if c.use_original else stats_df, global_stats)
+                    extra = c.run_extra(df, global_stats)
                 for v in extra:
                     v.update(table=self.table_name, partition="")
                     verdict_rows.append(v)
@@ -218,8 +192,6 @@ class ValidationSuite:
                 suite=self,
             )
         finally:
-            if cache:
-                stats_df.unpersist()
             if not with_violations:
                 # nothing downstream will re-read check-held intermediates
                 # (decode-result caches etc.) — free them now; otherwise

@@ -143,6 +143,7 @@ def main() -> None:
         "total_single_shot_sec": total_single,
         "queries_single_shot": single_shot,
         "sf": sf,
+        "driver_memory": spark.conf.get("spark.driver.memory"),
         "image_suite": {
             "metadata_only": suite_meta,
             "with_decode_psnr": suite_decode,

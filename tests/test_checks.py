@@ -576,8 +576,7 @@ def test_suite_violations_equal_union_of_check_violations(spark, planted):
         NotNullCheck("caption", keys=["image_id"]),
         ReferentialCheck("fmt", ["jpeg", "png"], keys=["fmt"]),
         # keys=None projects the whole row
-        PredicateCheck("caption_short", lambda: F.length("caption") < 12,
-                       columns=["caption"]),
+        PredicateCheck("caption_short", lambda: F.length("caption") < 12),
         InSetCheck("fmt", ["jpeg", "png", "webp"], keys=["image_id"]),
         RangeCheck("w", 16, 4096, keys=["image_id"]),
         # DataFrame dimension: stays a broadcast anti-join branch
@@ -703,3 +702,49 @@ def test_drift_histogram_job_per_group_set(spark, monkeypatch):
             for v in c.run_extra(shifted)]
     assert got == want
     assert {v["column"] for v in got} == {"x", "y", "x@a", "x@b", "y@a", "y@b"}
+
+
+@pytest.mark.parametrize("partition_by", [(), ("fmt",)], ids=["global", "by_fmt"])
+@pytest.mark.parametrize("n_rows", [0, 1])
+def test_degenerate_unit_scores_no_outliers(spark, n_rows, partition_by):
+    """An empty bucket or a 1-row unit cannot fit a Mahalanobis
+    covariance (an empty one not even a robust-z median): the suite still
+    runs, an unfitted model emits no violation rows (Mahalanobis no
+    outlier verdict either), and the row-level checks still read the
+    unit."""
+    rows = [("img_1", 100, 120, "jpeg", None)][:n_rows]
+    df = spark.createDataFrame(rows, "image_id string, w int, h int, fmt string, caption string")
+    checks = [
+        NotNullCheck("caption", keys=["image_id"]),
+        RobustZScoreCheck("w", threshold=6.0, keys=["image_id"]),
+        MahalanobisCheck(["w", "h"], alpha=0.999, keys=["image_id"]),
+    ]
+    res = ValidationSuite(checks, "images", partition_by=partition_by).run(df)
+    got = res.violations.collect()
+    assert [(r["image_id"], r["_check"]) for r in got] == [("img_1", "not_null:caption")] * n_rows
+    assert not [v for v in res.verdict_rows
+                if v["check"].startswith("mahalanobis") and v["metric"] == "outlier_rate"]
+    # a check's own violations() takes the same unfitted path
+    for c in checks[1:]:
+        assert c.violations(df).count() == 0
+
+
+def test_drift_verdicts_with_null_group_key(spark):
+    """A NULL group value next to non-NULL ones: verdicts come back per
+    group, the NULL group first, from the suite's shared job and from the
+    check's own."""
+    rows = [(float(i % 50), None if i % 4 == 0 else ("a" if i % 2 else "b"))
+            for i in range(400)]
+    df = spark.createDataFrame(rows, "x double, fmt string")
+    counts = {}
+    for r in histogram(df, "x", 0, 100, 10, ["fmt"]).collect():
+        counts.setdefault((r["fmt"],), [0] * 10)[r["bin"]] = r["n"]
+    check = DriftCheck("x", 0, 100, 10, counts, group_cols=["fmt"])
+    own = check.run_extra(df)
+    assert [v["column"] for v in own if v["metric"] == "psi"] == ["x@None", "x@a", "x@b"]
+    assert all(v["passed"] for v in own)  # self-comparison
+    shared = [v for v in ValidationSuite([check], "t").run(df).verdict_rows
+              if v["check"] == "drift:x"]
+    for v in shared:
+        del v["table"], v["partition"]
+    assert shared == own

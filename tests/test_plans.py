@@ -46,14 +46,48 @@ def test_violation_filter_pushes_down_to_scan(spark, images_path):
     assert "bytes" not in schema and "caption" not in schema
 
 
-def test_stats_frame_prunes_scan_columns(spark, images_path):
-    from anomalydetection_spark.plans.image_suite import build_image_suite
+def test_suite_jobs_read_bytes_only_where_needed(spark, images_path, monkeypatch):
+    """The suite runs every job on the input frame itself; Catalyst's
+    column pruning keeps the payload out of each scan that does not use
+    it. A spy on every action of a full image-suite run (decode and drift
+    on): of all its jobs, exactly two read ``bytes`` — the decode
+    aggregate and the drift histogram job (``length(bytes)``)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from anomalydetection_spark.plans.image_suite import (
+        build_image_suite,
+        drift_baseline_histograms,
+    )
 
     df = spark.read.parquet(images_path)
-    suite = build_image_suite(["jpeg", "png", "webp"], with_decode=True)
-    plan = plan_of(suite._stats_frame(df).groupBy("fmt").count())
-    schema = re.search(r"ReadSchema: struct<([^>]*)>", plan).group(1)
-    assert "bytes" not in schema, "stats pass must never scan payload bytes"
+    suite = build_image_suite(["jpeg", "png", "webp"], with_decode=True,
+                              drift_baselines=drift_baseline_histograms(df))
+    plans = []
+    collect, count = DataFrame.collect, DataFrame.count
+
+    def spy_collect(self):  # first() / head() end here too
+        plans.append(plan_of(self))
+        return collect(self)
+
+    def spy_count(self):
+        plans.append(plan_of(self.groupBy().count()))
+        return count(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy_collect)
+    monkeypatch.setattr(DataFrame, "count", spy_count)
+    try:
+        suite.run(df, spark)
+    finally:
+        monkeypatch.undo()
+        suite.release()
+    # fused pass, two post rounds, uniqueness, drift, decode
+    assert len(plans) == 6
+    reads_bytes = [p for p in plans
+                   if any("bytes:" in m for m in re.findall(r"ReadSchema: struct<([^\n]*)>", p))]
+    assert len(reads_bytes) == 2
+    decode, drift = sorted(reads_bytes, key=lambda p: "MapInPandas" not in p)
+    assert "MapInPandas" in decode
+    assert "_bin" in drift and "MapInPandas" not in drift
 
 
 def test_referential_uses_broadcast_join(spark, images_path):
